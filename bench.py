@@ -753,10 +753,12 @@ def main() -> None:
         # ground truth because the adjudicating box is never idle. The
         # side file carries loadavg_start/_end so consumers can judge
         # contamination themselves; the guard below still protects only
-        # the canonical committed artifact. SPARK_GRAFT_BENCH_OUT
-        # overrides the side path.
+        # the canonical committed artifact. The default side path
+        # carries the core count, so runs at different core counts keep
+        # their own detail; SPARK_GRAFT_BENCH_OUT overrides it.
+        cpus = spark.sparkContext.defaultParallelism
         side_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
-            repo_dir, "bench_result_latest.json"
+            repo_dir, f"bench_result_latest_c{cpus}.json"
         )
         with open(side_path, "w") as f:
             json.dump(detail, f, indent=2)

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from githubrepostorag_spark.functions import text as TXT
-from githubrepostorag_spark.session import driver_bound_rows, scale_out
+from githubrepostorag_spark.session import (
+    driver_bound_rows,
+    run_concurrently,
+    scale_out,
+)
 
 # Shared with the DuckDB oracle builders.
 SHINGLE_K = 4
@@ -1287,9 +1291,9 @@ def append_to_dedup_store(
     # The three appends are INDEPENDENT single-task jobs over the same
     # pinned signature frame (bands derive from it; fingerprints from
     # the pinned batch), each dominated by driver-side commit latency —
-    # run them concurrently from driver threads (guide §2.6). Callers
-    # see the append complete only when all three landed, as before.
-    from concurrent.futures import ThreadPoolExecutor
+    # run them concurrently from driver threads (guide §2.6) that keep
+    # the caller's job group. Callers see the append complete only when
+    # all three landed, as before.
 
     def _w_sigs():
         sigs.write.mode("append").parquet(path + "/signatures")
@@ -1310,10 +1314,7 @@ def append_to_dedup_store(
             path + "/fingerprints"
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(w) for w in (_w_sigs, _w_bands, _w_fps)]
-        for f in futures:
-            f.result()
+    run_concurrently(_w_sigs, _w_bands, _w_fps)
 
 
 def _dedup_tombstones_path(path: str) -> str:

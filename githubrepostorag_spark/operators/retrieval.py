@@ -11,13 +11,14 @@ collect `adjacent_k` per hop, return ≤`k` by score. Per-scope params:
     code (chunk table):     k=10, start_k=3, adjacent_k=8, max_depth=2
 
 Engine shape: a whole mixed-scope batch of queries retrieves in ONE
-shared set of jobs — queries hash-join the scope partitions
-(partition-pruned, filter pushdown), score = dot on unit vectors into
-a narrow cached (query_id, row_id, edge keys, score) table, then a
-bounded driver loop walks the hops: each ≤batch×k frontier row set is
-pushed back as literal isin predicates over the cached scores (no
-broadcast joins, no lineage recursion), and the final ≤k ids fetch doc
-bodies with one broadcast hash join. The store never shuffles.
+shared set of jobs — one columnar Arrow pass over the touched scope
+partitions applies every query's filters and scores it (dot on unit
+vectors, `_scored_np`) into a narrow cached (query_id, row_id, edge
+keys, score) table, then a bounded driver loop walks the hops: each
+≤batch×k frontier row set is pushed back as literal isin predicates
+over the cached scores (no broadcast joins, no lineage recursion), and
+the final ≤k ids fetch doc bodies with one broadcast hash join. The
+store never shuffles.
 """
 
 from __future__ import annotations
@@ -76,6 +77,11 @@ _DOC_COLS = (
 # inside one shared job
 _PARAM_COLS = ("p_k", "p_start_k", "p_adjacent_k", "p_max_depth")
 
+# queries per numpy score block in `_scored_np`: the per-batch score
+# matrix is at most (Arrow batch rows × _QUERY_CHUNK) float64s however
+# many queries a burst batch carries
+_QUERY_CHUNK = 64
+
 # slim scoring schema: ranking + hop expansion need only ids, edge
 # keys, and the score — doc bodies are fetched once for the final ≤k
 # rows, so the cached score table stays narrow at any store size
@@ -112,121 +118,58 @@ def _or_tree(conds: list):
     return conds[0]
 
 
-def _scored(
-    store: DataFrame,
-    queries: DataFrame,
-    query_meta: list[dict] | None = None,
+def _scored_np(
+    store: DataFrame, queries: DataFrame, meta_rows: list[dict]
 ) -> DataFrame:
     """All (query × candidate) scores under the query's filters (SURVEY
-    F10). Vectors are unit-normalized at write → cosine == dot.
+    F10) — the engine's one exact scorer. Vectors are unit-normalized at
+    write → cosine == dot.
 
-    Scale plan: a single null-or-equal join over every filter key is a
-    non-equi predicate, which Spark can only execute as a broadcast
-    nested-loop over the whole scope partition. Instead the (tiny)
-    query batch is split by WHICH filter keys are non-null — one tiny
-    driver-side pass over the query rows — and each group joins the
-    store on scope + its equality keys as a broadcast HASH join (the
-    store side never shuffles; provided keys prune candidates before
-    any vector math). The scope column is always an equality key, so
-    even the filterless group hash-joins instead of nested-looping.
-    `flt_topics` is a list-membership test, applied post-join per group.
-    """
-    meta_rows = (
-        query_meta
-        if query_meta is not None
-        else queries.select(
-            "query_id", *[f"flt_{k}" for k in FILTER_KEYS], "flt_topics", "q_scope"
-        ).collect()
-    )
-    # static scan pruning to the scopes this batch touches
-    scopes = sorted({r["q_scope"] for r in meta_rows})
-    groups: dict[tuple[str, ...], list[str]] = {}
-    topic_ids = set()
-    for r in meta_rows:
-        keys = tuple(k for k in FILTER_KEYS if r[f"flt_{k}"] is not None)
-        groups.setdefault(keys, []).append(r["query_id"])
-        if r["flt_topics"] is not None:
-            topic_ids.add(r["query_id"])
+    ONE `mapInArrow` pass over the slim store: each Arrow batch's
+    vectors are read as one flat numpy array, the scope / filter /
+    topics masks are `pyarrow.compute` kernels, and the matched rows
+    leave as one `take` plus a numpy score column — no per-row Python.
+    Each (row, query) score accumulates dim-sequentially in float64
+    (acc += v[i] * q[i]) over double-cast inputs, which is the
+    `V.dot` fold's left-to-right order bit for bit. A row scores NULL,
+    as under the fold, when its vector is NULL, holds a NULL element or
+    differs in length from the query's. Rounding stays JVM-side
+    (`F.round`).
 
-    out: DataFrame | None = None
-    st = store.filter(F.col("scope").isin(scopes)).alias("s")
-    for keys, qids in groups.items():
-        q = F.broadcast(queries.filter(F.col("query_id").isin(qids)).alias("q"))
-        cond = F.col("s.scope") == F.col("q.q_scope")
-        for k in keys:
-            cond = cond & (F.col(f"s.{k}") == F.col(f"q.flt_{k}"))
-        joined = st.join(q, cond)
-        if topic_ids.intersection(qids):
-            joined = joined.filter(
-                F.col("q.flt_topics").isNull()
-                | F.array_contains(
-                    F.coalesce(F.col("s.topics"), F.array()), F.col("q.flt_topics")
-                )
-            )
-        part = joined.select(
-            F.col("q.query_id").alias("query_id"),
-            *[F.col(f"s.{c}").alias(c) for c in _SLIM_COLS],
-            F.round(
-                V.dot(V.as_double(F.col("s.vector")), V.as_double(F.col("q.qvec"))), 6
-            ).alias("score"),
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:  # empty query batch
-        empty = _scored_schema_like(store, queries)
-        return empty
-    return out
-
-
-def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
-    """`_scored` computed through the Arrow boundary (guide §4.2/§8):
-    ONE pass over the slim store ships each candidate row into numpy
-    once, scores it against the whole (broadcast-in-closure) query
-    block, and emits exactly the rows the per-group broadcast hash
-    joins would — same filters, same null semantics, bit-identical
-    scores.
-
-    Why: the agent's batches are many-queries × small-store, so the
-    join shape evaluates the interpreted `zip_with`+`aggregate` dot
-    fold once per (query, candidate) pair — measured as the dominant
-    cost of agent_batch100 (~4 s of a ~12 s entry at 100×2.3k pairs).
-    Here each pair's score is one fused numpy multiply-add sweep:
-    accumulation runs dim-sequentially (acc += v[:, i] * q[i]) in
-    float64 over float→double-cast inputs, which reproduces the JVM
-    fold's left-to-right order bit for bit; rows whose vector is NULL
-    or off-dimension yield NULL score (the fold's null-poisoning
-    outcome). Rounding stays JVM-side (`F.round`) so the decimal
-    discipline is byte-identical to `_scored`'s.
-
-    `meta_rows` must carry ``qvec`` in addition to `_scored`'s meta
-    (the agent passes its own embeddings; they are round-tripped
-    through float32 below exactly as the array<float> query column
-    stores them)."""
+    `meta_rows` carry each query's ``qvec``; it is read at the `qvec`
+    column's element type, so an array<float> query round-trips
+    through float32 exactly as the column stores it."""
     import numpy as np
+    from pyspark.sql.types import FloatType
 
+    qtype = (
+        np.float32
+        if isinstance(queries.schema["qvec"].dataType.elementType, FloatType)
+        else np.float64
+    )
     scopes = sorted({r["q_scope"] for r in meta_rows})
-    groups: dict[tuple[str, ...], list[dict]] = {}
-    for r in meta_rows:
-        keys = tuple(k for k in FILTER_KEYS if r[f"flt_{k}"] is not None)
-        groups.setdefault(keys, []).append(r)
     # plain-python payload captured by the closure (no DataFrames):
-    # (query_id, scope, {filter key: value}, topics-or-None, qvec f64)
+    # (mask key = (scope, ((filter key, value), ...), topics), qvec f64);
+    # a qvec that is NULL or holds a NULL is None: every row scores NULL
     payload = []
-    dims = set()
-    for keys, rows in groups.items():
-        for r in rows:
-            qv = np.asarray(r["qvec"], dtype=np.float32).astype(np.float64)
-            dims.add(qv.shape[0])
-            payload.append(
+    for r in meta_rows:
+        qv = r["qvec"]
+        ok = qv is not None and all(x is not None for x in qv)
+        payload.append(
+            (
                 (
-                    r["query_id"],
                     r["q_scope"],
-                    {k: r[f"flt_{k}"] for k in keys},
+                    tuple(
+                        (k, r[f"flt_{k}"])
+                        for k in FILTER_KEYS
+                        if r[f"flt_{k}"] is not None
+                    ),
                     r["flt_topics"],
-                    qv,
-                )
+                ),
+                np.asarray(qv, dtype=qtype).astype(np.float64) if ok else None,
             )
-    assert len(dims) == 1, f"mixed query dims unsupported: {dims}"
-    dim = dims.pop()
+        )
+    qids = [r["query_id"] for r in meta_rows]
 
     slim = store.filter(F.col("scope").isin(scopes)).select(
         "scope", *_SLIM_COLS, "topics", "vector"
@@ -234,78 +177,98 @@ def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
 
     def score_batches(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
+        qid_arr = pa.array(qids, type=pa.string())
         for batch in batches:
-            cols = batch.to_pydict()
-            n = len(cols["row_id"])
+            n = batch.num_rows
             if n == 0:
                 continue
-            vecs = cols["vector"]
-            lens = np.fromiter(
-                (len(v) if v is not None else -1 for v in vecs),
-                dtype=np.int64,
-                count=n,
-            )
-            valid = lens == dim
-            Vm = (
-                np.asarray(
-                    [v for v, ok in zip(vecs, valid) if ok], dtype=np.float64
-                ).reshape(int(valid.sum()), dim)
-                if valid.any()
-                else np.zeros((0, dim))
-            )
-            scope_arr = np.asarray(cols["scope"], dtype=object)
-            key_arrs = {
-                k: np.asarray(cols[k], dtype=object) for k in FILTER_KEYS
-            }
-            topics_masks: dict[str, np.ndarray] = {}
-            out_cols: dict[str, list] = {c: [] for c in ("query_id", *_SLIM_COLS)}
-            out_scores: list = []
-            src = {c: np.asarray(cols[c], dtype=object) for c in _SLIM_COLS}
-            # one (valid rows × queries) score matrix per batch,
-            # accumulated dim-sequentially: per element this is the JVM
-            # fold's exact left-to-right order
-            Q = np.stack([qv for *_rest, qv in payload])  # (q, dim)
-            S = np.zeros((Vm.shape[0], len(payload)), dtype=np.float64)
-            for i in range(dim):
-                S = S + Vm[:, i : i + 1] * Q[None, :, i]
-            valid_pos = np.cumsum(valid) - 1  # row idx -> Vm/S row
-            for qi, (qid, qscope, flt, topics_val, _qv) in enumerate(payload):
-                mask = scope_arr == qscope
-                for k, v in flt.items():
-                    mask = mask & (key_arrs[k] == v)
-                if topics_val is not None:
-                    tm = topics_masks.get(topics_val)
-                    if tm is None:
-                        tm = np.fromiter(
-                            (topics_val in (t or []) for t in cols["topics"]),
-                            dtype=bool,
-                            count=n,
-                        )
-                        topics_masks[topics_val] = tm
-                    mask = mask & tm
-                idx = np.nonzero(mask)[0]
+            vec = batch.column("vector")
+            lens = pc.fill_null(pc.list_value_length(vec), 0).to_numpy()
+            starts = np.cumsum(lens) - lens  # row → offset in `flat`
+            flat = pc.list_flatten(vec)
+            vals = flat.to_numpy(zero_copy_only=False)
+            dims = lens.astype(np.int64)
+            dims[vec.is_null().to_numpy(zero_copy_only=False)] = -1
+            if flat.null_count:
+                parents = pc.list_parent_indices(vec).to_numpy()
+                dims[parents[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
+            masks: dict = {}
+
+            def mask(key):
+                m = masks.get(key)
+                if m is None:
+                    scope, flt, topics = key
+                    m = pc.equal(batch.column("scope"), scope)
+                    for k, v in flt:
+                        m = pc.and_(m, pc.equal(batch.column(k), v))
+                    m = pc.fill_null(m, False).to_numpy(zero_copy_only=False)
+                    if topics is not None:
+                        t = batch.column("topics")
+                        hit = pc.fill_null(pc.equal(pc.list_flatten(t), topics), False)
+                        has = np.zeros(n, dtype=bool)
+                        has[
+                            pc.list_parent_indices(t).to_numpy()[
+                                hit.to_numpy(zero_copy_only=False)
+                            ]
+                        ] = True
+                        m = m & has
+                    masks[key] = m
+                return m
+
+            for c0 in range(0, len(payload), _QUERY_CHUNK):
+                chunk = range(c0, min(c0 + _QUERY_CHUNK, len(payload)))
+                # queries sharing a scope and dimension score as one
+                # (rows × queries) block over the union of their rows
+                groups: dict[tuple, list[int]] = {}
+                for qi in chunk:
+                    key, qv = payload[qi]
+                    d = -1 if qv is None else qv.shape[0]
+                    groups.setdefault((key[0], d), []).append(qi)
+                idx_parts, qpos_parts, score_parts, null_parts = [], [], [], []
+                for (_scope, d), members in groups.items():
+                    ms = [mask(payload[qi][0]) for qi in members]
+                    rows = np.nonzero(
+                        np.logical_or.reduce(ms) & (dims == d) & (d >= 0)
+                    )[0]
+                    pos = np.full(n, -1, dtype=np.int64)
+                    pos[rows] = np.arange(rows.size)
+                    S = np.zeros((rows.size, len(members)), dtype=np.float64)
+                    if rows.size and d > 0:
+                        VT = vals[starts[rows][None, :] + np.arange(d)[:, None]]
+                        VT = VT.astype(np.float64)  # (d, rows)
+                        QT = np.stack([payload[qi][1] for qi in members], axis=1)
+                        tmp = np.empty_like(S)
+                        for i in range(d):
+                            np.multiply(VT[i][:, None], QT[i][None, :], out=tmp)
+                            S += tmp
+                    for j, (qi, m) in enumerate(zip(members, ms)):
+                        idx = np.nonzero(m)[0]
+                        p = pos[idx]
+                        ok = p >= 0
+                        sc = np.zeros(idx.size)
+                        sc[ok] = S[p[ok], j]
+                        idx_parts.append(idx)
+                        qpos_parts.append(np.full(idx.size, qi, dtype=np.int64))
+                        score_parts.append(sc)
+                        null_parts.append(~ok)
+                idx = np.concatenate(idx_parts)
                 if idx.size == 0:
                     continue
-                out_cols["query_id"].extend([qid] * idx.size)
-                for c in _SLIM_COLS:
-                    out_cols[c].extend(src[c][idx].tolist())
-                out_scores.extend(
-                    float(S[valid_pos[j], qi]) if valid[j] else None
-                    for j in idx
+                out = batch.select(list(_SLIM_COLS)).take(pa.array(idx))
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        qid_arr.take(pa.array(np.concatenate(qpos_parts))),
+                        *out.columns,
+                        pa.array(
+                            np.concatenate(score_parts),
+                            type=pa.float64(),
+                            mask=np.concatenate(null_parts),
+                        ),
+                    ],
+                    names=["query_id", *_SLIM_COLS, "score"],
                 )
-            if not out_scores:
-                continue
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(out_cols["query_id"], type=pa.string()),
-                    **{
-                        c: pa.array(out_cols[c], type=pa.string())
-                        for c in _SLIM_COLS
-                    },
-                    "score": pa.array(out_scores, type=pa.float64()),
-                }
-            )
 
     raw = slim.mapInArrow(
         score_batches,
@@ -315,20 +278,6 @@ def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
     )
     return raw.select(
         "query_id", *_SLIM_COLS, F.round(F.col("score"), 6).alias("score")
-    )
-
-
-def _scored_schema_like(store: DataFrame, queries: DataFrame) -> DataFrame:
-    st = store.alias("s")
-    q = queries.alias("q")
-    return (
-        st.crossJoin(q)
-        .select(
-            F.col("q.query_id").alias("query_id"),
-            *[F.col(f"s.{c}").alias(c) for c in _SLIM_COLS],
-            F.lit(0.0).alias("score"),
-        )
-        .limit(0)
     )
 
 
@@ -424,12 +373,11 @@ def retrieve_batch_multi(
     n_probes: int = 3,
     query_meta: list[dict] | None = None,
     max_depth: int = 2,
-    np_kernel: bool = False,
 ) -> DataFrame:
     """Seed-and-expand retrieval for a batch of queries spanning ANY mix
     of scopes — the whole batch runs as ONE Spark job.
 
-    queries: (query_id string, qvec array<float>, flt_namespace,
+    queries: (query_id string, qvec array<float|double>, flt_namespace,
     flt_repo, flt_module, flt_topics — nullable strings, q_scope string
     = TABLE scope, p_k/p_start_k/p_adjacent_k/p_max_depth ints); use
     `with_scope_params` to attach the last five. Returns ≤p_k rows per
@@ -437,30 +385,21 @@ def retrieve_batch_multi(
 
     `ivf` maps TABLE scope → IvfIndex; queries on indexed scopes score
     only their probe cells (approximate, like the reference's ANN
-    index), the rest score exactly with hash-join filter pruning.
-    The per-hop loop bound is `max_depth` globally with per-query
-    p_max_depth gating, so mixed-depth batches rank correctly. Callers
-    holding filter metadata driver-side (the agent does) pass
-    `query_meta` (with q_scope per row) to skip the metadata collect.
-
-    ``np_kernel``: opt-in vectorized scorer for the exact path — the
-    caller must pass `query_meta` rows that ALSO carry the query's
-    ``qvec``. Scoring then runs as one Arrow pass over the slim store
-    (`_scored_np`): each store row ships through the Python boundary
-    once and is scored against the whole broadcast query block in
-    numpy, instead of being joined and re-scored per query by the
-    interpreted higher-order fold. Scores are bit-identical (see
-    `_scored_np`); rounding stays JVM-side. The agent turns this on —
-    its batches are exactly the many-queries×small-store shape the
-    fold is slowest at. Oracle-parity callers (q40's retrieve_batch)
-    keep the default JVM fold.
+    index), the rest score exactly in one columnar Arrow pass over the
+    store (`_scored_np`). The per-hop loop bound is `max_depth`
+    globally with per-query p_max_depth gating, so mixed-depth batches
+    rank correctly. Callers holding the query rows driver-side (the
+    agent does) pass them as `query_meta` (q_scope, ranking params and
+    ``qvec`` per row) to skip the metadata collect; rows without
+    ``qvec`` are ignored and collected from `queries` instead.
     """
     ivf = ivf or {}
     meta_rows = (
         query_meta
-        if query_meta is not None
+        if query_meta is not None and all("qvec" in r for r in query_meta)
         else queries.select(
             "query_id",
+            "qvec",
             *[f"flt_{k}" for k in FILTER_KEYS],
             "flt_topics",
             "q_scope",
@@ -481,13 +420,7 @@ def retrieve_batch_multi(
     exact_meta = [r for r in meta_rows if r["q_scope"] not in ivf]
     parts: list[DataFrame] = []
     if exact_meta:
-        exact_ids = [r["query_id"] for r in exact_meta]
-        sub = queries if not ivf else queries.filter(F.col("query_id").isin(exact_ids))
-        parts.append(
-            _scored_np(store, exact_meta)
-            if np_kernel
-            else _scored(store, sub, exact_meta)
-        )
+        parts.append(_scored_np(store, queries, exact_meta))
     for tscope, index in ivf.items():
         qids = [r["query_id"] for r in meta_rows if r["q_scope"] == tscope]
         if not qids:

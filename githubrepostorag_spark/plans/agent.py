@@ -204,7 +204,8 @@ class GraphRAGAgent:
                     "p_start_k": p.start_k,
                     "p_adjacent_k": p.adjacent_k,
                     "p_max_depth": p.max_depth,
-                    # the vectorized scorer's input (np_kernel below)
+                    # the exact scorer reads the query vector from here
+                    # (no collect of the query frame; see _scored_np)
                     "qvec": rows[-1][1],
                 }
             )
@@ -230,11 +231,7 @@ class GraphRAGAgent:
             SCOPE_TO_TABLE.get(s, s): idx for s, idx in self.ivf.items() if idx is not None
         }
         rows = retrieve_batch_multi(
-            self.store, qdf, ivf=ivf_t or None, query_meta=meta,
-            # the agent holds its query embeddings driver-side, so the
-            # exact path can score through the vectorized Arrow kernel
-            # (one store pass for the whole batch — see _scored_np)
-            np_kernel=True,
+            self.store, qdf, ivf=ivf_t or None, query_meta=meta
         ).collect()
         for r in rows:
             d = r.asDict()

@@ -66,7 +66,7 @@ from githubrepostorag_spark.operators.similarity import (
     upgrade_ivf_store,
     write_ivf_store,
 )
-from githubrepostorag_spark.session import driver_bound_rows
+from githubrepostorag_spark.session import driver_bound_rows, run_concurrently
 
 DRIFT_COS_THRESHOLD = 0.995  # any cell below this triggers retrain+remap
 BALANCE_PERMILLE_THRESHOLD = 3000  # any cell above 3x uniform occupancy remaps
@@ -317,15 +317,10 @@ def maintain_ivf_store(
     ).localCheckpoint(eager=True)  # store append + sidecar + refit below
     # the two appends are independent writes to different directories
     # over the pinned frame — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fs = _pool.submit(
-            lambda: appended.write.mode("append").partitionBy("cell").parquet(path)
-        )
-        _fc = _pool.submit(append_ivf_sidecar, appended, path, -1)
-        _fs.result()
-        _fc.result()
+    run_concurrently(
+        lambda: appended.write.mode("append").partitionBy("cell").parquet(path),
+        lambda: append_ivf_sidecar(appended, path, -1),
+    )
 
     # --- drift: refit = closed-form fold of (sidecar ∪ batch) partials
     # vs frozen, by cosine — |cells|·dim rows end to end, no store scan

@@ -42,6 +42,33 @@ def scale_out(df, *cols: str):
     return df.repartition(n)
 
 
+def run_concurrently(*fns) -> None:
+    """Run independent driver-side Spark actions on parallel threads,
+    wait for all of them and re-raise the first failure.
+
+    The threads are `pyspark.InheritableThread`s, so their jobs keep
+    the caller's local properties — job group and description — and
+    stay attributed to (and cancellable with) the calling stream."""
+    from pyspark import InheritableThread
+
+    errors: list = [None] * len(fns)
+
+    def call(i):
+        try:
+            fns[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [InheritableThread(call, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+
+
 def _parse_mem_bytes(size: str) -> int:
     """JVM memory-string ('16g', '2048m', '1t', '512b') → bytes.
 

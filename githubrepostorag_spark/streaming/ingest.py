@@ -34,6 +34,7 @@ from githubrepostorag_spark.operators.vector_write import (
     finalize_vectors,
     storage_projection,
 )
+from githubrepostorag_spark.session import run_concurrently
 
 
 def _batch_rows(batch: DataFrame, embedder=None, dim: int | None = None) -> DataFrame:
@@ -227,11 +228,10 @@ def stream_dedup_gate(
         #
         # The two logs are INDEPENDENT jobs over already-pinned inputs,
         # so they run concurrently from driver threads (guide §2.6) —
-        # the barrier before the store append is the .result() pair,
+        # the barrier before the store append is the join of both,
         # preserving the crash-safety ordering above. Per-trigger wall
-        # drops by roughly one write's commit latency.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # drops by roughly one write's commit latency. The threads
+        # inherit the stream's job group (`run_concurrently`).
         def _write_acc():
             accepted.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
                 "append"
@@ -242,10 +242,7 @@ def stream_dedup_gate(
                 "append"
             ).parquet(rejected_path)
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa, fb = pool.submit(_write_acc), pool.submit(_write_rej)
-            fa.result()
-            fb.result()
+        run_concurrently(_write_acc, _write_rej)
         acc_sigs = sigs.join(dup_ids, "doc_id", "left_anti")
         append_to_dedup_store(
             accepted.select("doc_id", "text"), dedup_store_path,

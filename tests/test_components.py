@@ -366,6 +366,28 @@ def test_parse_mem_bytes_unitless_is_mib():
     assert _parse_mem_bytes("512b") == 512
 
 
+def test_run_concurrently_keeps_job_group_and_raises(spark):
+    """Jobs launched by `run_concurrently` stay in the caller's job
+    group, and a worker's failure is re-raised on the caller's thread."""
+    from githubrepostorag_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    sc.setJobGroup("run-concurrently-test", "threads inherit the group")
+    try:
+        run_concurrently(lambda: spark.range(10).count(), lambda: spark.range(3).count())
+        assert len(sc.statusTracker().getJobIdsForGroup("run-concurrently-test")) >= 2
+
+        def boom():
+            raise ValueError("boom")
+
+        with pytest.raises(ValueError, match="boom"):
+            run_concurrently(lambda: 1, boom)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
 def test_pagerank_guard_accepts_integral_rejects_string(spark):
     """The driver fast-path guard must be isinstance-based (str(dtype)
     repr varies across PySpark versions) and must check BOTH endpoints:
